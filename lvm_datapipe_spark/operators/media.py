@@ -23,7 +23,9 @@ relational.drop_failed_rows (F4) — never index-shifting retries (macvid.py:
 from __future__ import annotations
 
 import hashlib
+import uuid
 from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -216,6 +218,23 @@ def _indices_for_policy(n_frames: int, policy: str, stride: int) -> list[int]:
     raise ValueError(f"unknown sampling policy {policy!r}")
 
 
+def _sample_one(
+    data: bytes,
+    policy: str = "fractions",
+    stride: int = 10,
+    target_hw: tuple[int, int] | None = None,
+) -> list[bytes] | None:
+    """One video's sampled frames: header probe → policy indices → decode
+    at those indices (resized to ``target_hw``); None on failure (F4)."""
+    info = _probe(data)
+    if info is None:
+        return None
+    idx = _indices_for_policy(info["n_frames"], policy, stride)
+    return _decode_frames(
+        data, idx, native_hw=(info["height"], info["width"]), target_hw=target_hw
+    )
+
+
 def sample_frames_udf(
     policy: str = "fractions",
     stride: int = 10,
@@ -228,28 +247,22 @@ def sample_frames_udf(
     resizes at decode (decord parity, macvid.py:165-173): at 100 TB the
     difference between shipping 1080p and 224×224 frames through Arrow is
     the job."""
+    sample = partial(_sample_one, policy=policy, stride=stride, target_hw=target_hw)
 
     @pandas_udf(T.ArrayType(T.BinaryType()))
     def _sample(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for content in batches:
-            out = []
-            for data in content:
-                info = _probe(data)
-                if info is None:
-                    out.append(None)
-                    continue
-                idx = _indices_for_policy(info["n_frames"], policy, stride)
-                out.append(
-                    _decode_frames(
-                        data,
-                        idx,
-                        native_hw=(info["height"], info["width"]),
-                        target_hw=target_hw,
-                    )
-                )
-            yield pd.Series(out, dtype=object)
+            yield pd.Series([sample(data) for data in content], dtype=object)
 
     return _sample
+
+
+# Column-metadata keys that let ``apply_scorer`` sample inside its own UDF:
+# the frames column carries the sampling spec, and the spec's token is also
+# on the content column, so a matching pair proves the frames are still the
+# sampling of that content.  ``apply_scorer`` strips both from its output.
+_SPEC_KEY = "graft.sample_spec"
+_TOKEN_KEY = "graft.sample_token"
 
 
 def with_sampled_frames(
@@ -264,9 +277,25 @@ def with_sampled_frames(
     frames are ``(h, w)``-shaped at decode and the ``height``/``width``
     columns (when present) are overwritten to match — but ONLY on rows whose
     decode succeeded: failed rows keep their original metadata so the
-    columns never claim a shape for a payload that does not exist."""
-    out = videos.withColumn(
-        out_col, sample_frames_udf(policy, stride, target_hw)(F.col(content_col))
+    columns never claim a shape for a payload that does not exist.
+
+    The sampling spec goes into the Spark metadata of ``out_col``, with a
+    per-call token that is also written to ``content_col``; that lets
+    :func:`apply_scorer` sample inside the scorer UDF, so a caller that
+    drops ``out_col`` after scoring runs one Python pass, not two."""
+    token = uuid.uuid4().hex
+    spec = {"policy": policy, "stride": stride, "content": content_col, "token": token}
+    if target_hw is not None:
+        spec["target_hw"] = list(target_hw)
+    content = F.col(content_col)
+    content_meta = {**videos.schema[content_col].metadata, _TOKEN_KEY: token}
+    out = videos.withColumns(
+        {
+            content_col: content.alias(content_col, metadata=content_meta),
+            out_col: sample_frames_udf(policy, stride, target_hw)(content).alias(
+                out_col, metadata={_SPEC_KEY: spec}
+            ),
+        }
     )
     if target_hw is not None:
         th, tw = target_hw
@@ -282,6 +311,37 @@ def with_sampled_frames(
                 F.when(decoded, F.lit(tw)).otherwise(F.col("width")).cast("int"),
             )
     return out
+
+
+def _fused_sampler(fields: list[T.StructField], frames_col: str) -> tuple[str, Callable] | None:
+    """(content column, per-row sampler) when ``frames_col`` is still the
+    untouched output of :func:`with_sampled_frames` over a content column
+    that is still among ``fields``; None otherwise (a hand-built frames
+    column, or content replaced after sampling)."""
+    by_name = {f.name: f for f in fields}
+    spec = by_name[frames_col].metadata.get(_SPEC_KEY) if frames_col in by_name else None
+    if not spec or spec["content"] not in by_name:
+        return None
+    if by_name[spec["content"]].metadata.get(_TOKEN_KEY) != spec["token"]:
+        return None
+    hw = spec.get("target_hw")
+    sampler = partial(
+        _sample_one,
+        policy=spec["policy"],
+        stride=spec["stride"],
+        target_hw=tuple(hw) if hw else None,
+    )
+    return spec["content"], sampler
+
+
+def _without_sampling_tokens(df: DataFrame, fields: list[T.StructField]) -> DataFrame:
+    """Remove the sampling spec/token keys from the metadata of ``fields``
+    (``df``'s columns), so no provenance token reaches a written snapshot."""
+    for f in fields:
+        if _SPEC_KEY in f.metadata or _TOKEN_KEY in f.metadata:
+            keep = {k: v for k, v in f.metadata.items() if k not in (_SPEC_KEY, _TOKEN_KEY)}
+            df = df.withMetadata(f.name, keep)
+    return df
 
 
 # -- pure numeric kernels (the reference's published math) -------------------
@@ -389,7 +449,16 @@ def caption_text(frames: list[np.ndarray]) -> list[str]:
 # -- scorer UDF registry (instantiate_from_config analog) --------------------
 
 
-def _scorer_udf(name: str, stub_kernel: Callable[[list[np.ndarray], int, int], object], ret_type):
+def _scorer_udf(
+    name: str,
+    stub_kernel: Callable[[list[np.ndarray], int, int], object],
+    ret_type,
+    sampler: Callable[[bytes], list[bytes] | None] | None = None,
+):
+    """The scorer UDF over struct(frames, height, width) — or, with a
+    ``sampler``, over struct(content, height, width), sampling each row's
+    frames inside this same Python pass."""
+
     @pandas_udf(ret_type)
     def _udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
         # Iterator-of-batches form: kernel resolution happens HERE, once per
@@ -401,8 +470,11 @@ def _scorer_udf(name: str, stub_kernel: Callable[[list[np.ndarray], int, int], o
 
         kernel = resolve_kernel(name, stub_kernel)
         for pdf in batches:
+            frames_iter = (
+                pdf["frames"] if sampler is None else map(sampler, pdf["content"])
+            )
             out = []
-            for frames, h, w in zip(pdf["frames"], pdf["height"], pdf["width"]):
+            for frames, h, w in zip(frames_iter, pdf["height"], pdf["width"]):
                 if frames is None or h is None:
                     out.append(None)
                     continue
@@ -533,12 +605,26 @@ def apply_scorer(
 ) -> DataFrame:
     """Run a registered scorer over a frames column; appends the scorer's
     output column (null where decode failed).  The UDF consumes a struct of
-    (frames, height, width) so one Arrow transfer carries everything."""
+    (frames, height, width) so one Arrow transfer carries everything.
+
+    When ``frames_col`` is the untouched output of :func:`with_sampled_frames`
+    (its metadata token matches the content column's), the UDF reads
+    (content, height, width) instead and samples the frames itself, with
+    the same code and spec: the result is the same, and a caller that then
+    drops ``frames_col`` lets Catalyst prune the separate sampler UDF."""
     out_col, (kernel, ret_type) = SCORERS[scorer]
-    udf = _scorer_udf(scorer, kernel, ret_type)
+    fields = df.schema.fields
+    fused = _fused_sampler(fields, frames_col)
+    if fused is None:
+        udf = _scorer_udf(scorer, kernel, ret_type)
+        source = F.col(frames_col).alias("frames")
+    else:
+        content_col, sampler = fused
+        udf = _scorer_udf(scorer, kernel, ret_type, sampler)
+        source = F.col(content_col).alias("content")
     packed = F.struct(
-        F.col(frames_col).alias("frames"),
+        source,
         F.col(height_col).alias("height"),
         F.col(width_col).alias("width"),
     )
-    return df.withColumn(out_col, udf(packed))
+    return _without_sampling_tokens(df.withColumn(out_col, udf(packed)), fields)

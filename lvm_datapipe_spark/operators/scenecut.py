@@ -4,15 +4,17 @@ Reference shape (utils/scenecut.py:88-127): per video — decode, detect scene
 boundaries (PySceneDetect ContentDetector), split with ffmpeg, emit one
 nested-JSON record per clip.  Spark shape (SURVEY.md §3 EP1):
 
-    binaryFile scan → mapInPandas(detect_scenes) → explode(scenes)
-    → withColumn(clip metadata exprs) → write parquet
+    binaryFile scan → mapInPandas(decode once → detect → cut payloads;
+    one row per scene) → clip metadata exprs (video_id, clip_id,
+    clip_duration) → write parquet
 
-The detector here is the deterministic content-delta analog of
-ContentDetector (threshold on mean abs frame delta; reference threshold 30.0,
-scene_cut.py:191) running on FVID payloads; a real adapter would call
-PySceneDetect behind the same mapInPandas signature.  The physical ffmpeg
-split (M2) is modeled as a byte-range materialization UDF — see
-``split_clip_bytes`` — since clips of an FVID are themselves valid FVID.
+One Python pass, one decode per video, no shuffle or join.  The detector
+is the deterministic content-delta analog of ContentDetector (threshold on
+mean abs frame delta; reference threshold 30.0, scene_cut.py:191) running
+on FVID payloads; a real adapter calls PySceneDetect behind the same
+per-video dispatch (``_detect_one``).  The physical ffmpeg split (M2) is
+modeled as a frame-range re-encode of the decoded video (``_clip_payload``)
+since clips of an FVID are themselves valid FVID.
 """
 
 from __future__ import annotations
@@ -24,23 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from lvm_datapipe_spark import fakevideo
 from lvm_datapipe_spark.functions.strings import clip_id, file_stem
 
 DEFAULT_THRESHOLD = 30.0  # scene_cut.py:191 / utils/scenecut.py:96
-
-SCENES_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start_frame", T.IntegerType()),
-            T.StructField("end_frame", T.IntegerType()),
-            T.StructField("start_s", T.DoubleType()),
-            T.StructField("end_s", T.DoubleType()),
-        ]
-    )
-)
 
 
 def detect_scene_bounds(frames: np.ndarray, fps: float, threshold: float) -> list[tuple]:
@@ -105,108 +95,49 @@ def pyscenedetect_bounds(
     return out
 
 
-def _detect_one(data: bytes, threshold: float) -> list[tuple] | None:
-    """Per-video dispatch: FVID → content-delta analog; real containers →
-    PySceneDetect when importable on this worker; else None (F4 null row)."""
+def _detect_one(
+    data: bytes, threshold: float
+) -> tuple[list[tuple], fakevideo.FakeVideo | None] | None:
+    """Per-video dispatch: FVID → (content-delta bounds, the decoded video);
+    real containers → (PySceneDetect bounds, None) when importable on this
+    worker; else None (F4: the video yields no clips)."""
     if data is None:
         return None
     try:
         if fakevideo.is_fvid(data):
             v = fakevideo.decode(data)
-            return detect_scene_bounds(v.frames, v.fps, threshold)
+            return detect_scene_bounds(v.frames, v.fps, threshold), v
         if have_pyscenedetect():
-            return pyscenedetect_bounds(data, threshold)
+            return pyscenedetect_bounds(data, threshold), None
         return None
     except Exception:  # noqa: BLE001 — F4 null-row semantics
         return None
 
 
-def detect_scenes(
-    videos: DataFrame,
-    content_col: str = "content",
-    threshold: float = DEFAULT_THRESHOLD,
-    out_col: str = "scenes",
-) -> DataFrame:
-    """M1 — one row per video gains a ``scenes`` array (the flatMap/UDTF
-    shape noted in SURVEY.md §2.9: array-returning pandas UDF + explode).
-    Backend resolves per worker inside the UDF (:func:`_detect_one`)."""
-
-    @pandas_udf(SCENES_TYPE)
-    def _detect(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for content in batches:
-            yield pd.Series(
-                [_detect_one(data, threshold) for data in content], dtype=object
-            )
-
-    return videos.withColumn(out_col, _detect(F.col(content_col)))
-
-
-def explode_scenes_to_clips(
-    videos_with_scenes: DataFrame,
-    path_col: str = "path",
-    scenes_col: str = "scenes",
-) -> DataFrame:
-    """Explode scenes → one clip row per scene with the reference's clip
-    metadata: video_id from the filename, clip index = per-video row_number
-    ordered by start_frame (scene_cut.py:82 loop counter), clip_id =
-    ``f'{video_id}_{idx:07d}'`` (C1), duration in seconds (C8).
-    """
-    w = Window.partitionBy("video_id").orderBy(F.col("scene.start_frame"))
-    return (
-        videos_with_scenes.filter(F.col(scenes_col).isNotNull())
-        .select(
-            file_stem(F.col(path_col)).alias("video_id"),
-            F.col(path_col).alias("video_path"),
-            F.explode(F.col(scenes_col)).alias("scene"),
-        )
-        .withColumn("clip_index", F.row_number().over(w) - 1)
-        .select(
-            "video_id",
-            "video_path",
-            clip_id(F.col("video_id"), F.col("clip_index")).alias("clip_id"),
-            F.col("clip_index"),
-            F.col("scene.start_frame").alias("start_frame"),
-            F.col("scene.end_frame").alias("end_frame"),
-            F.col("scene.start_s").alias("start_s"),
-            F.col("scene.end_s").alias("end_s"),
-            (F.col("scene.end_s") - F.col("scene.start_s")).alias("clip_duration"),
-        )
-    )
-
-
-CLIP_BYTES_TYPE = T.BinaryType()
-
-
-def split_clip_bytes(
-    clips: DataFrame, content_col: str = "content", out_col: str = "clip_content"
-) -> DataFrame:
+def _clip_payload(
+    video: fakevideo.FakeVideo | None, start_f: int, end_f: int
+) -> bytes | None:
     """M2 — physical clip split.  The reference shells out to ffmpeg per
     scene (split_video_ffmpeg, utils/scenecut.py:120-121); here the split is
-    a byte-range re-encode of the FVID payload (a real adapter would invoke
-    ffmpeg in a foreachPartition with the same columns).  Null content or
-    bounds → null clip (F4)."""
+    a frame-range re-encode of the already decoded FVID (a clip of an FVID
+    is itself a valid FVID).  No decoded video (a real container) → null
+    payload; ``ffmpeg_split_clips`` is the real-container splitter."""
+    if video is None:
+        return None
+    frames = video.frames[start_f:end_f]
+    return fakevideo.encode(fakevideo.FakeVideo(video.height, video.width, video.fps, frames))
 
-    @pandas_udf(CLIP_BYTES_TYPE)
-    def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        for pdf in batches:
-            out = []
-            for data, s, e in zip(pdf["content"], pdf["start_frame"], pdf["end_frame"]):
-                try:
-                    v = fakevideo.decode(data)
-                    clip = fakevideo.FakeVideo(
-                        v.height, v.width, v.fps, v.frames[int(s) : int(e)]
-                    )
-                    out.append(fakevideo.encode(clip))
-                except Exception:  # noqa: BLE001
-                    out.append(None)
-            yield pd.Series(out, dtype=object)
 
-    packed = F.struct(
-        F.col(content_col).alias("content"),
-        F.col("start_frame").alias("start_frame"),
-        F.col("end_frame").alias("end_frame"),
-    )
-    return clips.withColumn(out_col, _split(packed))
+_CUT_FIELDS = [
+    T.StructField("video_path", T.StringType()),
+    # every emitted scene has an index, so the column is declared non-null
+    T.StructField("clip_index", T.IntegerType(), nullable=False),
+    T.StructField("start_frame", T.IntegerType()),
+    T.StructField("end_frame", T.IntegerType()),
+    T.StructField("start_s", T.DoubleType()),
+    T.StructField("end_s", T.DoubleType()),
+]
+_PAYLOAD_FIELD = T.StructField("clip_content", T.BinaryType())
 
 
 def have_ffmpeg() -> bool:
@@ -255,8 +186,8 @@ def ffmpeg_split_clips(clips: DataFrame, out_dir: str) -> None:
     files with ffmpeg, one subprocess per clip row, fanned out with
     ``foreachPartition`` (the executors shell out in parallel; no data moves
     through the driver).  Requires the ffmpeg binary on the workers
-    (:func:`have_ffmpeg`); ``split_clip_bytes`` remains the in-engine
-    byte-range splitter for FVID payloads."""
+    (:func:`have_ffmpeg`); ``scene_cut`` remains the in-engine splitter
+    for FVID payloads."""
     import subprocess
 
     def _run(argv):  # pragma: no cover — needs the real binary
@@ -277,18 +208,54 @@ def scene_cut(
     threshold: float = DEFAULT_THRESHOLD,
     materialize_clips: bool = True,
 ) -> DataFrame:
-    """EP1 end-to-end: videos(path, content) → clips table with per-clip
-    metadata (+ clip payloads when ``materialize_clips``).  The reference's
+    """EP1 end-to-end: videos(path, content) → one row per scene with the
+    reference's clip metadata (+ the clip payload ``clip_content`` when
+    ``materialize_clips``; null for non-FVID input).
+
+    One ``mapInPandas`` pass decodes each video once, detects its scenes
+    (M1) and cuts their payloads (M2); no shuffle, join or second scan.
+    ``video_id`` is the file stem, ``clip_index`` numbers one FILE's scenes
+    from 0 in start order (the scene_cut.py:82 loop counter), ``clip_id``
+    is ``f'{video_id}_{idx:07d}'`` (C1) and ``clip_duration`` is in seconds
+    (C8).  Like the reference, clip ids assume unique stems: two files with
+    one stem in different directories each number their own clips from 0.
+    A video that fails to decode yields no clips (F4).  The reference's
     joblib chunking / breakpoint-resume scaffolding (scene_cut.py:226-263)
     is replaced by Spark task parallelism + the generic resume anti-join."""
-    with_scenes = detect_scenes(videos, content_col, threshold)
-    clips = explode_scenes_to_clips(with_scenes, path_col)
-    if materialize_clips:
-        # join the raw payload (NOT with_scenes — that would run the
-        # detector a second time down the second lineage)
-        payload = videos.select(F.col(path_col).alias("video_path"), F.col(content_col))
-        clips = split_clip_bytes(clips.join(payload, "video_path"))
-    return clips
+    fields = _CUT_FIELDS + ([_PAYLOAD_FIELD] if materialize_clips else [])
+    names = [f.name for f in fields]
+
+    def _cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for path, data in zip(pdf["video_path"], pdf["content"]):
+                got = _detect_one(data, threshold)
+                if got is None:
+                    continue
+                bounds, video = got
+                for idx, (s, e, s_s, e_s) in enumerate(bounds):
+                    row = (path, idx, s, e, s_s, e_s)
+                    if materialize_clips:
+                        row += (_clip_payload(video, s, e),)
+                    rows.append(row)
+            yield pd.DataFrame(rows, columns=names)
+
+    scenes = videos.select(
+        F.col(path_col).alias("video_path"), F.col(content_col).alias("content")
+    ).mapInPandas(_cut, T.StructType(fields))
+    payload = ["clip_content"] if materialize_clips else []
+    return scenes.withColumn("video_id", file_stem(F.col("video_path"))).select(
+        "video_id",
+        "video_path",
+        clip_id(F.col("video_id"), F.col("clip_index")).alias("clip_id"),
+        "clip_index",
+        "start_frame",
+        "end_frame",
+        "start_s",
+        "end_s",
+        (F.col("end_s") - F.col("start_s")).alias("clip_duration"),
+        *payload,
+    )
 
 
 def boundary_f1(

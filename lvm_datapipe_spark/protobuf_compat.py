@@ -22,10 +22,12 @@ Two gaps to bridge, both documented per VERDICT r5 item 6:
    (tests/test_streaming.py) is the proof the relaxation is sound — it
    round-trips real state-server traffic.
 
-Workers get the same bootstrap through
-:mod:`lvm_datapipe_spark.protobuf_daemon` (a ``spark.python.daemon.module``
-shim that calls :func:`ensure_protobuf` before handing off to
-``pyspark.daemon``).
+Workers get the same bootstrap through ``_pybootstrap/sitecustomize.py``:
+when the runtime resolves only via the path probe, ``session.get_spark``
+prepends that directory to the ``PYTHONPATH`` the JVM hands its Python
+processes, and each spawned interpreter (daemon, worker, and the
+transformWithState driver worker) imports it at startup and calls
+:func:`ensure_protobuf`.
 """
 
 from __future__ import annotations
@@ -47,11 +49,10 @@ _path_added = False
 
 def needs_worker_bootstrap() -> bool:
     """True when protobuf only works here via the fallback path probe — in
-    that case Python workers need the same bootstrap, so the session should
-    point ``spark.python.daemon.module`` at
-    ``lvm_datapipe_spark.protobuf_daemon``.  False on a properly
-    provisioned cluster (protobuf installed normally), where no daemon
-    override is wanted."""
+    that case Python workers need the same bootstrap, so the session puts
+    ``_pybootstrap`` (its ``sitecustomize.py``) on the workers'
+    ``PYTHONPATH``.  False on a properly provisioned cluster (protobuf
+    installed normally), where no bootstrap is wanted."""
     ensure_protobuf()
     return _path_added
 

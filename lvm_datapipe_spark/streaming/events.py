@@ -397,9 +397,10 @@ def tws_available() -> bool:
     pyspark's generated StateMessage code.  The container ships pyspark
     without protobuf installed; :mod:`lvm_datapipe_spark.protobuf_compat`
     bootstraps a public on-disk runtime (path probe + same-major version
-    relaxation) for the driver, and the session routes workers through the
-    ``protobuf_daemon`` shim.  False only when no runtime can be found at
-    all."""
+    relaxation) for the driver, and the session puts
+    ``_pybootstrap/sitecustomize.py`` on the workers' ``PYTHONPATH`` so
+    every spawned interpreter applies the same bootstrap.  False only when
+    no runtime can be found at all."""
     from lvm_datapipe_spark.protobuf_compat import ensure_protobuf
 
     if not ensure_protobuf():

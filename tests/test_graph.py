@@ -556,6 +556,9 @@ def test_reachability_env_gate_forces_distributed_plan(spark, monkeypatch):
     assert [f.name for f in fast.schema.fields] == [
         f.name for f in slow.schema.fields
     ]
+    assert [f.dataType for f in fast.schema.fields] == [
+        f.dataType for f in slow.schema.fields
+    ]
 
 
 def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch):
@@ -576,6 +579,37 @@ def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch)
     assert [f.dataType for f in fast.schema.fields] == [
         f.dataType for f in slow.schema.fields
     ]
+
+
+@pytest.mark.parametrize(
+    "extra", [[], [(100, 50), (100, 51), (100, 52)]], ids=["path", "path_and_triangle"]
+)
+def test_supplier_triangles_sparse_graph_both_sides_of_gate(
+    spark, monkeypatch, tmp_path, extra
+):
+    # a path graph closes no triangle: neither engine may list its
+    # suppliers with a zero count, as the oracle SQL lists none
+    import pandas as pd
+
+    from lvm_datapipe_spark.operators.dedup import release
+    from lvm_datapipe_spark.queries import QUERIES
+
+    rows = [(o, s) for o in range(20) for s in (o, o + 1)] + extra
+    pd.DataFrame(rows, columns=["l_orderkey", "l_suppkey"]).astype("int64").to_parquet(
+        tmp_path / "lineitem.parquet"
+    )
+    want = {(50, 1), (51, 1), (52, 1)} if extra else set()
+    fast = QUERIES["graph_supplier_triangles"](spark, str(tmp_path))
+    assert "array_intersect" not in fast._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", "0")
+    slow = QUERIES["graph_supplier_triangles"](spark, str(tmp_path))
+    try:
+        assert "array_intersect" in slow._jdf.queryExecution().executedPlan().toString()
+        assert {tuple(r) for r in fast.collect()} == want
+        assert {tuple(r) for r in slow.collect()} == want
+        assert fast.dtypes == slow.dtypes
+    finally:
+        release(slow)
 
 
 # -- converged k-core (VERDICT r7 item 5) ------------------------------------

@@ -101,8 +101,100 @@ def test_scene_cut_invariants(spark, videos, clips):
 
 def test_scene_cut_null_on_corrupt(spark):
     bad = spark.createDataFrame([("x.fvid", bytearray(b"JUNKJUNKJUNK"))], ["path", "content"])
-    out = scenecut.detect_scenes(bad)
-    assert out.filter(F.col("scenes").isNotNull()).count() == 0
+    assert scenecut.scene_cut(bad).count() == 0
+
+
+def _reference_clips(videos, materialize_clips=True, threshold=30.0):
+    """Driver-side scene cut: decode each scanned file, detect its scenes,
+    number them per file from 0, cut the payloads; undecodable files give
+    no clips."""
+    import os
+
+    rows = []
+    for r in videos.select("path", "content").collect():
+        try:
+            v = fakevideo.decode(bytes(r.content))
+        except Exception:  # noqa: BLE001 — a corrupt file has no clips
+            continue
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        bounds = scenecut.detect_scene_bounds(v.frames, v.fps, threshold)
+        for idx, (s, e, s_s, e_s) in enumerate(bounds):
+            row = (stem, r.path, f"{stem}_{idx:07d}", idx, s, e, s_s, e_s, e_s - s_s)
+            if materialize_clips:
+                clip = fakevideo.FakeVideo(v.height, v.width, v.fps, v.frames[s:e])
+                row += (fakevideo.encode(clip),)
+            rows.append(row)
+    return sorted(rows)
+
+
+def _rows(df):
+    return sorted(
+        tuple(bytes(x) if isinstance(x, bytearray) else x for x in r) for r in df.collect()
+    )
+
+
+CLIP_COLUMNS = [
+    ("video_id", "string"), ("video_path", "string"), ("clip_id", "string"),
+    ("clip_index", "int"), ("start_frame", "int"), ("end_frame", "int"),
+    ("start_s", "double"), ("end_s", "double"), ("clip_duration", "double"),
+]
+
+
+@pytest.fixture(scope="module")
+def messy_corpus(tmp_path_factory):
+    """Good videos, a junk ``.fvid``, a truncated one, and two files that
+    share a stem in different subdirectories."""
+    d = tmp_path_factory.mktemp("messy")
+    fakevideo.write_corpus(str(d), ["good_a", "good_b", "good_c"])
+    (d / "junk.fvid").write_bytes(b"JUNKJUNKJUNKJUNKJUNK")
+    whole = fakevideo.encode(fakevideo.generate("cut_short"))
+    (d / "truncated.fvid").write_bytes(whole[: len(whole) // 2])
+    for sub, vid in (("x", "twin_x"), ("y", "twin_y")):
+        (d / sub).mkdir()
+        (d / sub / "twin.fvid").write_bytes(fakevideo.encode(fakevideo.generate(vid)))
+    return str(d)
+
+
+def test_scene_cut_matches_driver_reference(spark, messy_corpus):
+    videos = scan_video_dir(spark, messy_corpus)
+    got = scenecut.scene_cut(videos)
+    assert got.dtypes == CLIP_COLUMNS + [("clip_content", "binary")]
+    # clip_id and clip_index are declared non-null in the clip table
+    assert [f.name for f in got.schema.fields if not f.nullable] == ["clip_id", "clip_index"]
+    want = _reference_clips(videos)
+    assert _rows(got) == want
+    stems = {r[0] for r in want}
+    assert "junk" not in stems and "truncated" not in stems
+
+
+def test_scene_cut_without_payloads(spark, messy_corpus):
+    videos = scan_video_dir(spark, messy_corpus)
+    got = scenecut.scene_cut(videos, materialize_clips=False)
+    assert got.dtypes == CLIP_COLUMNS
+    assert _rows(got) == _reference_clips(videos, materialize_clips=False)
+
+
+def test_scene_cut_numbers_clips_per_file(spark, messy_corpus):
+    """Two files with one stem: each numbers its own clips from 0, so
+    their clip ids collide (clip ids assume unique stems, as the
+    reference's ``f'{video_id}_{idx:07d}'`` does)."""
+    videos = scan_video_dir(spark, messy_corpus).filter(F.col("path").endswith("/twin.fvid"))
+    rows = scenecut.scene_cut(videos, materialize_clips=False).collect()
+    per_file = {}
+    for r in rows:
+        assert r.video_id == "twin"
+        per_file.setdefault(r.video_path, []).append((r.start_frame, r.clip_index))
+    assert len(per_file) == 2
+    for spans in per_file.values():
+        assert [i for _, i in sorted(spans)] == list(range(len(spans)))
+
+
+def test_scene_cut_plan_is_one_scan_no_shuffle(spark, videos):
+    out = media.probe_videos(scenecut.scene_cut(videos), content_col="clip_content")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    assert plan.count("FileScan binaryFile") == 1
 
 
 # -- frame sampling + scorers ----------------------------------------------
@@ -199,6 +291,91 @@ def test_decode_failure_yields_null_row(spark):
     sampled = media.with_sampled_frames(df)
     assert sampled.filter(F.col("frames").isNotNull()).count() == 1
     assert drop_failed_rows(sampled, "frames").count() == 1
+
+
+@pytest.fixture(scope="module")
+def fusion_input(spark, scored_input):
+    """Scored clips plus an undecodable row and a null-content row."""
+    bad = spark.createDataFrame(
+        [("bad", bytearray(b"\x00not-a-video"), 480, 640, None), ("none", None, 24, 32, None)],
+        scored_input.schema,
+    )
+    return scored_input.unionByName(bad).coalesce(1).cache()
+
+
+SAMPLINGS = {
+    "native": {},
+    "resized": {"policy": "stride", "stride": 7, "target_hw": (12, 16)},
+}
+
+
+def _hand_sampled(df, policy="fractions", stride=10, target_hw=None):
+    """with_sampled_frames built by hand: the same frames and shape
+    columns, without the sampling metadata."""
+    out = df.withColumn(
+        "frames", media.sample_frames_udf(policy, stride, target_hw)(F.col("content"))
+    )
+    if target_hw is not None:
+        decoded = F.col("frames").isNotNull()
+        for c, v in zip(("height", "width"), target_hw):
+            out = out.withColumn(c, F.when(decoded, F.lit(v)).otherwise(F.col(c)).cast("int"))
+    return out
+
+
+def _no_frames(df):
+    """Collected rows without the frames column (dropped after the
+    collect, so the plan still computes it)."""
+    cols = [c for c in df.columns if c != "frames"]
+    return sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()), key=lambda t: t[0]
+    ), [d for d in df.dtypes if d[0] != "frames"]
+
+
+@pytest.mark.parametrize("sampling", sorted(SAMPLINGS))
+@pytest.mark.parametrize("scorer", sorted(media.SCORERS))
+def test_fused_scorer_matches_unfused(fusion_input, scorer, sampling):
+    kw = SAMPLINGS[sampling]
+    sampled = media.with_sampled_frames(fusion_input, **kw)
+    assert media._fused_sampler(sampled.schema.fields, "frames") is not None
+    fused = media.apply_scorer(sampled, scorer).drop("frames")
+    hand = _hand_sampled(fusion_input, **kw)
+    replaced = sampled.withColumn("content", F.col("content").cast("binary"))
+    for unfused in (hand, replaced):
+        assert media._fused_sampler(unfused.schema.fields, "frames") is None
+    want = _no_frames(fused)
+    assert {r[0] for r in want[0] if r[-1] is None} == {"bad", "none"}
+    for other in (hand, sampled, replaced):
+        # sampled keeps its frames column: the sampler runs beside the scorer
+        assert _no_frames(media.apply_scorer(other, scorer)) == want
+
+
+def _python_eval_nodes(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(1 for line in plan.splitlines() if "ArrowEvalPython [" in line)
+
+
+def test_scorer_stage_is_one_python_pass(spark, scored_input, tmp_path):
+    path = str(tmp_path / "snap")
+    pipeline.write_snapshot(scored_input, path)
+    snap = pipeline.read_snapshot(spark, path)
+    for scorer in ("aesthetic", "motion"):
+        stage = media.apply_scorer(media.with_sampled_frames(snap), scorer).drop("frames")
+        assert _python_eval_nodes(stage) == 1
+
+
+def test_written_snapshot_has_no_sampling_tokens(spark, scored_input, tmp_path):
+    def score(df):
+        sampled = media.with_sampled_frames(df, policy="first_mid_last", target_hw=(12, 16))
+        return media.apply_scorer(sampled, "motion").drop("frames")
+
+    first = str(tmp_path / "s1")
+    pipeline.write_snapshot(pipeline.run_stage(scored_input, score, "of_score"), first)
+    resumed = str(tmp_path / "s2")
+    snap = pipeline.read_snapshot(spark, first)
+    pipeline.write_snapshot(pipeline.run_stage(snap, score, "of_score"), resumed)
+    for path in (first, resumed):
+        for f in spark.read.parquet(path).schema.fields:
+            assert not any(k.startswith("graft.") for k in f.metadata), (path, f)
 
 
 def test_kernel_math():
