@@ -616,12 +616,11 @@ def apply_scorer(
     fields = df.schema.fields
     fused = _fused_sampler(fields, frames_col)
     if fused is None:
-        udf = _scorer_udf(scorer, kernel, ret_type)
-        source = F.col(frames_col).alias("frames")
+        source, sampler = F.col(frames_col).alias("frames"), None
     else:
         content_col, sampler = fused
-        udf = _scorer_udf(scorer, kernel, ret_type, sampler)
         source = F.col(content_col).alias("content")
+    udf = _scorer_udf(scorer, kernel, ret_type, sampler)
     packed = F.struct(
         source,
         F.col(height_col).alias("height"),
